@@ -195,11 +195,12 @@ object SetSimJoin {
     * is an exact BigInteger fold over rows already in hand — the Spark
     * census aggregate it replaces was a separate action whose
     * materialize-then-aggregate cycle cost q_ngram_jaccard ~3 s of its
-    * 6 s at sf0.1 (SetSimVariants A/B: asis 6.10 s min vs census-free
-    * 2.91 s, identical 10 778 output rows). Same threshold, same loud
-    * steering message, same exact integer mass — only the engine that
-    * computes it changes. Longs accumulate until near overflow and spill
-    * into BigInteger, so the guard stays exact at any df.
+    * 6 s at sf0.1 (isolated A/B in `plans/r22/setsim_variants.txt`:
+    * asis 6.10 s min vs census-free 2.91 s, identical 10 778 output
+    * rows). Same threshold, same loud steering message, same exact
+    * integer mass — only the engine that computes it changes. Longs
+    * accumulate until near overflow and spill into BigInteger, so the
+    * guard stays exact at any df.
     */
   private def guardCandidateMassDriver(dfRows: Array[org.apache.spark.sql.Row],
       dfOrdinal: Int, maxCandidates: Long, op: String): Unit = {
@@ -394,13 +395,16 @@ object SetSimJoin {
         // here.
         val dfTab = dfTabReuse.getOrElse(
           ex.groupBy(bc :+ col("sj_tok"): _*).agg(count(lit(1)).as("sj_df")))
-        // SHUFFLE_HASH on the df side of the non-broadcast join-back (r22):
-        // the reused table arrives as a checkpointed LogicalRDD with no
-        // usable stats, so the planner falls back to sort-merge and SORTS
-        // the full inverted index on (block, token) just to attach a
-        // count. Hashing the vocabulary-sized df side per partition skips
-        // both sorts at the same exchange count (build side ≪ index by
-        // the vocabulary contract).
+        // SHUFFLE_HASH on the df side of the non-broadcast join-back (r22).
+        // Its only trigger is a caller passing `hotDfThreshold =
+        // Long.MaxValue` (hot split disabled): no gate does, and Packed's
+        // oversized-vocabulary fallback keeps the default threshold. A
+        // reused df table arrives as a checkpointed LogicalRDD with no
+        // usable stats, so the planner would fall back to sort-merge and
+        // SORT the full inverted index on (block, token) just to attach a
+        // count; hashing the vocabulary-sized df side skips both sorts at
+        // the same exchange count. The price is sort-merge's spill safety:
+        // each hash build holds its partition's slice of the vocabulary.
         if (bcast) ex.join(broadcast(dfTab), blockCols :+ "sj_tok")
         else if (hotDf == Long.MaxValue)
           ex.join(dfTab.hint("SHUFFLE_HASH"), blockCols :+ "sj_tok")
@@ -769,9 +773,9 @@ object SetSimJoin {
     // window recount's second corpus scan) is REVERTED here on a fresh
     // isolated A/B: the substituted join-back ranked index cost 5.33 s
     // min vs 2.03 s for the plain window form on q_containment at sf0.1
-    // (SetSimVariants, per-variant JVMs, identical 505 output rows), even
-    // with a SHUFFLE_HASH hint on the df side — the checkpointed
-    // LogicalRDD's stats-free join plus the extra scan of the
+    // (per-variant JVMs, `plans/r22/setsim_variants.txt`, identical 505
+    // output rows), even with a SHUFFLE_HASH hint on the df side — the
+    // checkpointed LogicalRDD's stats-free join plus the extra scan of the
     // materialized table cost more than the one corpus re-scan they
     // avoid. The census keeps its own combiner-reduced aggregate (~0.5 s
     // incl. the corpus pass); net ~2.3 s off the gate.

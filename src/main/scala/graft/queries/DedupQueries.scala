@@ -184,10 +184,7 @@ object DedupQueries extends QueryDomain {
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           ()
         }
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
+        Staging.rmTree(new java.io.File(tmp))
       }
       // Heavy clone: each micro-batch runs a full connected-components
       // contraction inside foreachBatch — per-batch shuffle parallelism,

@@ -366,6 +366,12 @@ object EventQueries extends QueryDomain {
       // emitted candidates over the fixture — identical output to the
       // full GROUP BY + HAVING oracle because every true heavy hitter
       // survives its shard's summary after any arrival order.
+      //
+      // Deliberately single-batch: no maxFilesPerTrigger, so both parity
+      // files and the sentinel land in ONE data batch and the shard state
+      // never merges across a micro-batch boundary here. EventStreamsSpec
+      // covers that merge for this operator; the mFPT=1 doc-replay gates
+      // (q_stream_neardup and kin) cover the replay's batch boundary.
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
       val schema = Staging.replayDocsSchema(ss, staged)

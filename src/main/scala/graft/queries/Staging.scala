@@ -67,8 +67,9 @@ private[queries] object Staging {
     * gate per rep (r22: the protocol floor was the sweep's largest cost
     * block; `processAllAvailable` provably waits for the no-data
     * finalization batch — the r21 gates ALREADY emitted through it, because
-    * parquet-java's hidden `.crc` artifacts inflated [[filesInDir]] and
-    * packed both sentinels into the data batch, oracle green both rounds).
+    * their file-count packing also counted parquet-java's hidden `.crc`
+    * artifacts and so put both sentinels into the data batch, oracle green
+    * both rounds).
     * Modification times order the replay events-first. Sentinel rows carry
     * `user_id = -1` / `event_type = 'sentinel'`; callers filter them back
     * out of their sink.
@@ -81,21 +82,8 @@ private[queries] object Staging {
       // ts as a nanosecond BIGINT whatever the fixture's physical type), so
       // the int64-ts sentinel files below always share its schema — staging
       // a raw fixture copy broke every stream gate when the fixture flipped
-      // to timestamp[us] (round 10). Spark writes to a side dir and only the
-      // part file moves in: _SUCCESS/.crc artifacts would otherwise corrupt
-      // the filesInDir-based micro-batch packing.
-      val tmp = p + "_stage"
-      graft.Tables.events(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $tmp"))
-      Files.move(part.toPath, Paths.get(p, "a_events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(tmp))
+      // to timestamp[us] (round 10).
+      writeOneParquet(graft.Tables.events(spark, sfDir), p, "a_events.parquet")
       val maxTs = spark.read.parquet(s"$p/a_events.parquet")
         .agg(org.apache.spark.sql.functions.max("ts")).head().getLong(0)
       val gapNs = gapSec * 1000000000L
@@ -164,19 +152,8 @@ private[queries] object Staging {
           ((col("doc_id") + 1600000000L) * 1000000000L).cast("long").as("ts"))
       val now = System.currentTimeMillis()
       Seq(0, 1).foreach { parity =>
-        val tmp = s"${p}_stage$parity"
-        docs.filter(col("doc_id") % 2 === parity).coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
         val name = if (parity == 0) "a_docs.parquet" else "b_docs.parquet"
-        Files.move(part.toPath, Paths.get(p, name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
+        writeOneParquet(docs.filter(col("doc_id") % 2 === parity), p, name)
         Paths.get(p, name).toFile.setLastModified(now - 30000 + parity * 10000); ()
       }
       val maxTs = spark.read.parquet(s"$p/b_docs.parquet")
@@ -302,9 +279,10 @@ private[queries] object Staging {
         }
     }
 
-  /** Write `df` as ONE parquet file named `name` directly under `destDir`
-    * (Spark writes to a side dir; only the part file moves in — _SUCCESS/
-    * .crc artifacts would corrupt filesInDir-based micro-batch packing).
+  /** Write `df` as ONE parquet file named `name` directly under `destDir`.
+    * Spark writes to a side dir and only the part file moves in: the
+    * file-stream source reads every visible file in the directory, so a
+    * `_SUCCESS` marker or a second part file would enter the replay.
     */
   private[queries] def writeOneParquet(
       df: org.apache.spark.sql.DataFrame, destDir: String, name: String): Unit = {
@@ -315,10 +293,12 @@ private[queries] object Staging {
       .getOrElse(sys.error(s"no part file written under $tmp"))
     Files.move(part.toPath, Paths.get(destDir, name),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(tmp))
+    rmTree(new java.io.File(tmp))
+  }
+
+  /** Delete `f` and, if it is a directory, everything under it. */
+  private[queries] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** A single NULL-text sentinel row for the documents replay (see
@@ -426,21 +406,6 @@ private[queries] object Staging {
     }
   }
 
-  /** Number of VISIBLE regular files under `path` (the staged replay
-    * directory) — the files the file-stream source will actually read.
-    * Hidden artifacts (parquet-java's `.…crc` checksums next to the
-    * sentinel files) are excluded, as the source excludes them: counting
-    * them inflated every r18–r21 `maxFilesPerTrigger = filesInDir − 1`
-    * packing past the real file count, silently collapsing the
-    * sessionize-family replays to a single data batch (benign — emission
-    * rode the no-data batch, oracle green — but the packing arithmetic
-    * must be honest now that the batch count is deliberate).
-    */
-  def filesInDir(path: String): Int =
-    Option(new java.io.File(path).listFiles())
-      .map(_.count(f => f.isFile && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))).getOrElse(0)
-
   /** Schema of the staged replay — the NORMALIZED events file, where `ts`
     * is a nanosecond BIGINT regardless of the fixture's physical type.
     * Stream gates pin THIS schema; pinning the raw fixture's schema would
@@ -473,11 +438,6 @@ private[queries] object Staging {
   }
 
   private def cleanupOnExit(path: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      rmTree(new java.io.File(path))))
 }

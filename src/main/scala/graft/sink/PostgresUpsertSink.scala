@@ -26,9 +26,7 @@ final case class LoadStats(loaded: Long, rejected: Long, errors: Seq[String]) {
   *    does NOT narrow the upstream scan/conform stage the way the
   *    reference's `coalesce` does
   *    (`/root/reference/psycopg2_database_helper.py:321-325`): `coalesce(1)`
-  *    there collapses the whole pipeline to one task. Callers that want the
-  *    reference's zero-shuffle behavior (tiny inputs) pass
-  *    `shuffleBarrier = false`.
+  *    there collapses the whole pipeline to one task.
   *  - one lazily-opened connection per partition
   *    (`/root/reference/psycopg2_database_helper.py:152-154`).
   *  - rows grouped into `batchSize` transactions, committed per batch so an
@@ -50,6 +48,17 @@ final case class LoadStats(loaded: Long, rejected: Long, errors: Seq[String]) {
   */
 object PostgresUpsertSink {
 
+  /** Reconnect-and-resume recoveries per partition (see [[writePartition]]). */
+  private val ReconnectAttempts = 1
+
+  /** Error MESSAGES kept per partition; `rejected` still counts every bad
+    * row. Uncapped, a systematically bad feed at 10⁵ partitions would ship
+    * an unbounded string list through the stats collect to the driver — the
+    * one place this sink could re-grow a driver-side data path. The
+    * reference caps nothing (psycopg2_database_helper.py:337-357).
+    */
+  private val MaxErrors = 100
+
   def upsert(
       df: DataFrame,
       tableName: String,
@@ -59,10 +68,7 @@ object PostgresUpsertSink {
       parallelism: Int = 1,
       partitionCols: Seq[String] = Nil,
       colsNotForUpdate: Seq[String] = Nil,
-      maxRejects: Option[Long] = None,
-      shuffleBarrier: Boolean = true,
-      reconnectAttempts: Int = 1,
-      maxErrors: Int = 100): LoadStats = {
+      maxRejects: Option[Long] = None): LoadStats = {
 
     val sql = UpsertSqlGen.build(
       df.schema.fieldNames.toIndexedSeq, tableName,
@@ -70,14 +76,11 @@ object PostgresUpsertSink {
 
     val routed =
       if (partitionCols.nonEmpty) df.repartition(parallelism, partitionCols.map(col): _*)
-      else if (shuffleBarrier) df.repartition(parallelism)
-      else df.coalesce(parallelism)
+      else df.repartition(parallelism)
 
     val stats = routed
       .mapPartitions { rows: Iterator[Row] =>
-        Iterator.single(
-          writePartition(rows, sql, factory, batchSize, maxRejects,
-            reconnectAttempts, maxErrors))
+        Iterator.single(writePartition(rows, sql, factory, batchSize, maxRejects))
       }(Encoders.product[PartitionStats])
       .collect()
 
@@ -91,7 +94,7 @@ object PostgresUpsertSink {
     *
     * Transient-fault posture: a [[SinkConnectionLostException]] (network
     * drop, server restart) between/within batches triggers up to
-    * `reconnectAttempts` reconnect-and-resume recoveries per partition —
+    * [[ReconnectAttempts]] reconnect-and-resume recoveries per partition —
     * committed batches are durable by design, and the in-flight batch is
     * re-run in full on the fresh connection. If the loss struck during
     * `commit()` the transaction's fate is in doubt; re-running is still
@@ -105,24 +108,16 @@ object PostgresUpsertSink {
       sql: String,
       factory: ConnectionFactory,
       batchSize: Int,
-      maxRejects: Option[Long],
-      reconnectAttempts: Int = 1,
-      maxErrors: Int = 100): PartitionStats = {
+      maxRejects: Option[Long]): PartitionStats = {
     require(batchSize > 0, "batchSize must be positive")
-    require(maxErrors >= 1, "maxErrors must be positive")
     var conn: SinkConnection = null
     var seen = 0L
     var rejected = 0L
-    var reconnectsLeft = reconnectAttempts
-    // Error MESSAGES are capped per partition (`rejected` still counts every
-    // bad row): uncapped, a systematically bad feed at 10⁵ partitions would
-    // ship an unbounded string list through the stats collect to the driver
-    // — the one place this sink could re-grow a driver-side data path. The
-    // reference caps nothing (psycopg2_database_helper.py:337-357).
+    var reconnectsLeft = ReconnectAttempts
     var suppressed = 0L
     val errors = mutable.ArrayBuffer.empty[String]
     def recordErrors(errs: Seq[String]): Unit = {
-      val room = maxErrors - errors.size
+      val room = MaxErrors - errors.size
       errors ++= errs.take(room)
       suppressed += math.max(0, errs.size - room)
     }
@@ -166,7 +161,7 @@ object PostgresUpsertSink {
       }
       if (!poisoned) flush()
       if (suppressed > 0)
-        errors += s"($suppressed further error messages suppressed by maxErrors=$maxErrors)"
+        errors += s"($suppressed further error messages suppressed by maxErrors=$MaxErrors)"
       PartitionStats(seen - rejected, rejected, errors.toIndexedSeq)
     } finally if (conn != null) conn.close()
   }

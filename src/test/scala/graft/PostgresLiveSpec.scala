@@ -142,20 +142,39 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("per-batch commit durability: committed batches survive a poisoned feed") {
     live()
     psql("CREATE TABLE live_poison (id int PRIMARY KEY, name varchar(10), qty int NOT NULL)")
-    // One partition (single id-range after hash partitioning is not
-    // deterministic — use parallelism 1 via direct writePartition shape):
-    // first batch all good, second batch entirely poison → circuit breaker
-    // trips, but batch 1 is already committed on the server.
-    val spark = SparkSpec.session
+    // One partition fed in arrival order (a shuffle would not keep the
+    // order, so the partition body runs directly): first batch all good,
+    // second batch entirely poison → circuit breaker trips, but batch 1 is
+    // already committed on the server.
     val good = (1 to 4).map(i => Row(i, s"n$i", i))
     val poison = (5 to 8).map(i => Row(i, null, null))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(good ++ poison, 1), schema)
-    val stats = PostgresUpsertSink.upsert(df, "live_poison",
-      uniqueKey = Some(Seq("id")), factory = PsqlConnectionFactory(sockDir),
-      batchSize = 4, parallelism = 1, shuffleBarrier = false)
+    val sql = UpsertSqlGen.build(schema.fieldNames.toIndexedSeq, "live_poison", Seq("id"))
+    val stats = PostgresUpsertSink.writePartition((good ++ poison).iterator, sql,
+      PsqlConnectionFactory(sockDir), batchSize = 4, maxRejects = None)
     assert(stats.rejected === 4)
     assert(tableState("live_poison").keySet === (1 to 4).toSet)
+  }
+
+  test("a failing first row in a 1000-row batch: the split finishes, 999 land") {
+    live()
+    psql("CREATE TABLE live_echo (id int PRIMARY KEY, name text, qty int NOT NULL)")
+    // Row 1 breaks NOT NULL, so the other 999 statements of the first
+    // attempt each echo an "aborted transaction" error — more than a pipe
+    // buffer holds. Wide rows keep the unsent statements larger than a pipe
+    // buffer too, so a backend that stops reading blocks its writer; the
+    // timeout turns that into a failure instead of a hung suite.
+    val pad = "x" * 500
+    val rows = Row(1, pad, null) +: (2 to 1000).map(i => Row(i, pad, i))
+    val sql = UpsertSqlGen.build(schema.fieldNames.toIndexedSeq, "live_echo", Seq("id"))
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val stats = Await.result(Future(PostgresUpsertSink.writePartition(rows.iterator, sql,
+      PsqlConnectionFactory(sockDir), batchSize = 1000, maxRejects = None))(
+      ExecutionContext.global), 120.seconds)
+    assert(stats.loaded === 999 && stats.rejected === 1)
+    assert(stats.errors.size === 1 && stats.errors.head.contains("null value"),
+      stats.errors.mkString("; "))
+    assert(psql("SELECT count(*), min(id) FROM live_echo") === Seq("999|2"))
   }
 
   test("pg_catalog introspection SQL (O7/O8) validated against the live server") {
@@ -239,6 +258,32 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     s"rm -rf $csvDir".!
   }
 
+  test("Loader.loadPostgres live: two rows with one key in a batch, the later wins") {
+    live()
+    psql("CREATE TABLE live_dupkey (id bigint PRIMARY KEY, name varchar(20), qty int)")
+    // One CSV file is one input partition, and hash routing on the key
+    // keeps each map task's rows in order, so both key-2 rows reach one
+    // batch in file order.
+    val csvDir = Files.createTempDirectory("graft-csv")
+    Files.writeString(csvDir.resolve("part1.csv"),
+      """id,name,qty
+        |1,alpha,1
+        |2,first,2
+        |3,gamma,3
+        |2,second,20
+        |""".stripMargin)
+    val cfg = Loader.LoadConfig(source = "csv", path = csvDir.toString,
+      targetTable = "public.live_dupkey", sourceOptions = Map("header" -> "true"),
+      batchSize = 1000, parallelism = 1, partitionCols = Seq("id"))
+    val stats = Loader.loadPostgres(SparkSpec.session, cfg, new PsqlCatalog(psql),
+      PsqlConnectionFactory(sockDir))
+    // Loaded + rejected equals the 4 rows routed; nothing is unread.
+    assert(stats.loaded === 4 && stats.rejected === 0)
+    assert(psql("SELECT id, name, qty FROM live_dupkey ORDER BY id") === Seq(
+      "1|alpha|1", "2|second|20", "3|gamma|3"))
+    s"rm -rf $csvDir".!
+  }
+
   /** [[graft.meta.PgCatalog]] over the live server through psql — the same
     * three SQL texts [[JdbcPgCatalog]] issues over JDBC, placeholders
     * rendered to literals. Driver-side only, like every catalog read.
@@ -314,6 +359,12 @@ final case class PsqlConnectionFactory(sock: String) extends ConnectionFactory {
 /** `psql` pipe as a transactional [[SinkConnection]]. ON_ERROR_STOP stays
   * off so an aborted transaction keeps accepting ROLLBACK TO — the same
   * contract a JDBC connection gives the binary split.
+  *
+  * A daemon thread drains psql's output into a queue while statements are
+  * written. After a failing row every later statement of the batch echoes
+  * an "aborted transaction" error; with nobody reading, a batch's worth of
+  * echoes fills the pipe, psql stops reading its input, and the writer
+  * blocks with it.
   */
 final class PsqlSinkConnection(sock: String) extends SinkConnection {
   private val proc = {
@@ -324,8 +375,26 @@ final class PsqlSinkConnection(sock: String) extends SinkConnection {
     pb.start()
   }
   private val in = new BufferedWriter(new OutputStreamWriter(proc.getOutputStream))
-  private val out = new BufferedReader(new InputStreamReader(proc.getInputStream))
+  // Every output line in arrival order; None marks end of stream.
+  private val lines = new java.util.concurrent.LinkedBlockingQueue[Option[String]]
+  private val drain = new Thread(() => {
+    val out = new BufferedReader(new InputStreamReader(proc.getInputStream))
+    try Iterator.continually(out.readLine()).takeWhile(_ != null)
+      .foreach(l => lines.put(Some(l)))
+    catch { case _: java.io.IOException => () }
+    finally lines.put(None)
+  }, "psql-drain")
+  drain.setDaemon(true)
+  drain.start()
   private var fence = 0
+
+  /** Next output line; throws once psql's output has ended. */
+  private def nextLine(): String = lines.take() match {
+    case Some(l) => l
+    case None =>
+      lines.put(None) // every later call sees the end too
+      throw new IllegalStateException("psql died mid-conversation")
+  }
 
   /** Run statements, return every ERROR line seen before the fence. */
   private def exec(stmts: Seq[String]): Seq[String] = {
@@ -335,12 +404,11 @@ final class PsqlSinkConnection(sock: String) extends SinkConnection {
     in.write(s"\\echo $mark\n")
     in.flush()
     val errs = mutable.ArrayBuffer.empty[String]
-    var line = out.readLine()
-    while (line != null && line != mark) {
+    var line = nextLine()
+    while (line != mark) {
       if (line.startsWith("ERROR:")) errs += line
-      line = out.readLine()
+      line = nextLine()
     }
-    if (line == null) throw new IllegalStateException("psql died mid-conversation")
     errs.toIndexedSeq
   }
 

@@ -55,20 +55,19 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("error messages cap at maxErrors; rejects still fully counted") {
-    // 50 bad rows spread so no batch fully rejects (poison breaker stays
+    // 143 bad rows spread so no batch fully rejects (poison breaker stays
     // cold): the reject COUNT must stay exact while the message list caps
-    // at maxErrors plus one suppression summary — the stats collect to the
-    // driver stays bounded on a systematically bad feed.
-    val bad: Set[Long] = (1L to 100L).filter(_ % 2 == 1).toSet
+    // at the sink's 100 plus one suppression summary — the stats collect
+    // to the driver stays bounded on a systematically bad feed.
+    val bad: Set[Long] = (1L to 286L).filter(_ % 2 == 1).toSet
     val factory = new FakeConnectionFactory("cap", bad)
-    val rows = (1L to 100L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
+    val rows = (1L to 286L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     val stats = PostgresUpsertSink.writePartition(
-      rows.iterator, "sql", factory, batchSize = 10, maxRejects = None,
-      maxErrors = 7)
-    assert(stats.loaded == 50 && stats.rejected == 50)
-    assert(stats.errors.size == 8)
+      rows.iterator, "sql", factory, batchSize = 10, maxRejects = None)
+    assert(stats.loaded == 143 && stats.rejected == 143)
+    assert(stats.errors.size == 101)
     assert(stats.errors.last ==
-      "(43 further error messages suppressed by maxErrors=7)")
+      "(43 further error messages suppressed by maxErrors=100)")
   }
 
   test("property: every good row lands exactly once, every bad row rejected once") {
@@ -99,23 +98,19 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
 
   test("shuffle barrier keeps upstream task count independent of sink parallelism") {
     import org.apache.spark.TaskContext
-    def upstreamTasks(shuffleBarrier: Boolean, id: String): Int = {
-      val acc = spark.sparkContext.collectionAccumulator[Long](s"tids_$id")
-      val base = spark.createDataset(1L to 200L)
-        .repartition(8) // a genuinely 8-wide upstream stage
-        .mapPartitions { it => acc.add(TaskContext.get().taskAttemptId()); it }
-        .map(i => (i, s"v$i")).toDF("k", "v")
-      val factory = new FakeConnectionFactory(s"barrier_$id", Set.empty)
-      val stats = PostgresUpsertSink.upsert(base, "t", Some(Seq("k")), factory,
-        batchSize = 50, parallelism = 1, shuffleBarrier = shuffleBarrier)
-      assert(stats.loaded == 200)
-      acc.value.toArray.distinct.length
-    }
+    val acc = spark.sparkContext.collectionAccumulator[Long]("tids_barrier")
+    val base = spark.createDataset(1L to 200L)
+      .repartition(8) // a genuinely 8-wide upstream stage
+      .mapPartitions { it => acc.add(TaskContext.get().taskAttemptId()); it }
+      .map(i => (i, s"v$i")).toDF("k", "v")
+    val factory = new FakeConnectionFactory("barrier", Set.empty)
+    val stats = PostgresUpsertSink.upsert(base, "t", Some(Seq("k")), factory,
+      batchSize = 50, parallelism = 1)
+    assert(stats.loaded == 200)
     // repartition(1) is a shuffle barrier: the 8-task upstream stage still
-    // runs 8-wide even though only 1 connection writes.
-    assert(upstreamTasks(shuffleBarrier = true, "on") == 8)
-    // reference-faithful coalesce(1) collapses the upstream to 1 task.
-    assert(upstreamTasks(shuffleBarrier = false, "off") == 1)
+    // runs 8-wide even though only 1 connection writes (the reference's
+    // coalesce(1) would collapse it to 1 task).
+    assert(acc.value.toArray.distinct.length == 8)
   }
 
   test("connection dying once mid-partition: reconnect resumes with zero spurious rejects") {
