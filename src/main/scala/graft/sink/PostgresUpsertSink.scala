@@ -36,6 +36,20 @@ final case class LoadStats(loaded: Long, rejected: Long, errors: Seq[String]) {
   *    recursively binary-split so bad rows are isolated in O(log batchSize)
   *    extra round trips while good rows still land
   *    (`/root/reference/psycopg2_database_helper.py:11-39,70-120`).
+  *  - every savepointed slice goes out as multi-row statements, the shape
+  *    psycopg2's `execute_values` pages into (reference
+  *    `psycopg2_database_helper.py:89-90`):
+  *    `INSERT … VALUES (?, …), (?, …), … ON CONFLICT …`
+  *    ([[UpsertSqlGen.Statement]]). The slice is first cut into maximal runs
+  *    in which no conflict key repeats, since Postgres refuses a
+  *    `DO UPDATE` statement that would touch one row twice (SQLSTATE
+  *    21000); cutting instead of dropping earlier duplicates keeps arrival
+  *    order and reject semantics exact. Each run is then sent in statements
+  *    of at most `min(batchSize, 32767 / columns)` rows, 32767 being the
+  *    bind-parameter count every driver accepts. The cut is only an
+  *    optimisation: the split still works over rows, so keys Postgres calls
+  *    equal and the JVM does not (`char(n)` padding, numeric scale) end in
+  *    a failed statement that the split resolves.
   *  - poison-partition circuit breaker: when an entire batch's rows all
   *    reject, the partition aborts instead of grinding through a doomed feed
   *    (`/root/reference/psycopg2_database_helper.py:168-169`), upgraded here
@@ -59,6 +73,11 @@ object PostgresUpsertSink {
     */
   private val MaxErrors = 100
 
+  /** Bind parameters per statement: the Postgres wire protocol counts them
+    * in 16 bits and pgjdbc stops at 32767, so every driver accepts this many.
+    */
+  private val MaxParams = 32767
+
   def upsert(
       df: DataFrame,
       tableName: String,
@@ -70,7 +89,7 @@ object PostgresUpsertSink {
       colsNotForUpdate: Seq[String] = Nil,
       maxRejects: Option[Long] = None): LoadStats = {
 
-    val sql = UpsertSqlGen.build(
+    val stmt = UpsertSqlGen.statement(
       df.schema.fieldNames.toIndexedSeq, tableName,
       uniqueKey.getOrElse(Nil), colsNotForUpdate)
 
@@ -80,7 +99,7 @@ object PostgresUpsertSink {
 
     val stats = routed
       .mapPartitions { rows: Iterator[Row] =>
-        Iterator.single(writePartition(rows, sql, factory, batchSize, maxRejects))
+        Iterator.single(writePartition(rows, stmt, factory, batchSize, maxRejects))
       }(Encoders.product[PartitionStats])
       .collect()
 
@@ -105,7 +124,7 @@ object PostgresUpsertSink {
     */
   private[graft] def writePartition(
       rows: Iterator[Row],
-      sql: String,
+      stmt: UpsertSqlGen.Statement,
       factory: ConnectionFactory,
       batchSize: Int,
       maxRejects: Option[Long]): PartitionStats = {
@@ -123,11 +142,20 @@ object PostgresUpsertSink {
     }
     val batch = mutable.ArrayBuffer.empty[Seq[Any]]
     var poisoned = false
+    val maxRows = math.max(1, math.min(batchSize, MaxParams / stmt.columns))
+    // Clean batches all send the batchSize-row text: build it once, and hand
+    // the backend the same String so its statement cache hits by reference.
+    var lastRows = 0
+    var lastSql = ""
+    val sql = (rows: Int) => {
+      if (rows != lastRows) { lastRows = rows; lastSql = stmt.sql(rows) }
+      lastSql
+    }
 
     def flush(): Unit = if (batch.nonEmpty) {
       val inFlight = batch.toIndexedSeq
       def attempt(): (Long, Seq[String]) = {
-        val res = executeIsolated(conn, sql, inFlight)
+        val res = executeIsolated(conn, sql, maxRows, stmt.keyIdx, inFlight)
         conn.commit()
         res
       }
@@ -167,19 +195,34 @@ object PostgresUpsertSink {
   }
 
   /** Savepoint-scoped execution with recursive binary-split isolation: a
-    * failing batch of n > 1 rows is rolled back to its savepoint, split in
+    * failing slice of n > 1 rows is rolled back to its savepoint, split in
     * half, and both halves re-queued (LIFO, so isolation stays depth-first
     * and memory stays O(batch)); a failing singleton is counted as one reject
     * with its error message. Good rows always land; each bad row costs at
     * most O(log₂ n) extra round trips.
+    *
+    * This form sends `sql` once per row, all of a slice's rows in one
+    * `executeBatch`: the one-row statement through the same loop as the
+    * sink's multi-row one.
     */
   private[graft] def executeIsolated(
       conn: SinkConnection,
       sql: String,
+      batch: Seq[Seq[Any]]): (Long, Seq[String]) =
+    executeIsolated(conn, _ => sql, 1, IndexedSeq.empty, batch)
+
+  /** As above, each slice sent by [[send]] as statements of at most
+    * `maxRows` rows, `sql(k)` being the text for `k` rows.
+    */
+  private def executeIsolated(
+      conn: SinkConnection,
+      sql: Int => String,
+      maxRows: Int,
+      keyIdx: IndexedSeq[Int],
       batch: Seq[Seq[Any]]): (Long, Seq[String]) = {
     var rejected = 0L
     val errors = mutable.ArrayBuffer.empty[String]
-    var stack = List(batch)
+    var stack = List(batch.toIndexedSeq)
     var n = 0
     while (stack.nonEmpty) {
       val b = stack.head
@@ -188,7 +231,7 @@ object PostgresUpsertSink {
       val sp = s"graft_sp_$n"
       conn.savepoint(sp)
       try {
-        conn.executeBatch(sql, b)
+        send(conn, sql, maxRows, keyIdx, b)
         conn.release(sp)
       } catch {
         // A dead connection is not a bad row: no rollback attempt (the
@@ -207,5 +250,40 @@ object PostgresUpsertSink {
       }
     }
     (rejected, errors.toIndexedSeq)
+  }
+
+  /** Sends `rows` in order as statements of at most `maxRows` rows, cut
+    * wherever the key at `keyIdx` repeats (never, when `keyIdx` is empty).
+    * One statement is one `executeBatch` element holding its rows' values
+    * flattened; consecutive statements of one size share a call.
+    */
+  private def send(
+      conn: SinkConnection,
+      sql: Int => String,
+      maxRows: Int,
+      keyIdx: IndexedSeq[Int],
+      rows: IndexedSeq[Seq[Any]]): Unit = {
+    val pieces = mutable.ArrayBuffer.empty[IndexedSeq[Seq[Any]]]
+    var start = 0
+    def cut(end: Int): Unit = rows.slice(start, end).grouped(maxRows).foreach(pieces += _)
+    if (keyIdx.nonEmpty) {
+      val seen = mutable.HashSet.empty[Any]
+      var i = 0
+      while (i < rows.size) {
+        val r = rows(i)
+        val key = if (keyIdx.size == 1) r(keyIdx(0)) else keyIdx.map(r)
+        if (!seen.add(key)) { cut(i); start = i; seen.clear(); seen += key }
+        i += 1
+      }
+    }
+    cut(rows.size)
+    var i = 0
+    while (i < pieces.size) {
+      val k = pieces(i).size
+      var j = i + 1
+      while (j < pieces.size && pieces(j).size == k) j += 1
+      conn.executeBatch(sql(k), pieces.slice(i, j).map(_.flatten).toIndexedSeq)
+      i = j
+    }
   }
 }

@@ -22,8 +22,11 @@ class SinkConnectionLostException(message: String, cause: Throwable = null)
   * the harness has no live Postgres (SURVEY.md §7.5 risk 2).
   */
 trait SinkConnection extends AutoCloseable {
-  /** Execute `sql` once per row of `batch` inside the current transaction.
-    * Throws on any failure (the whole batch is then considered failed).
+  /** Execute `sql` once per element of `batch` inside the current
+    * transaction. One element binds all of the statement's placeholders in
+    * order: one row for a one-row statement, `k` rows' values flattened for
+    * the sink's `k`-row statement. Throws on any failure (the whole batch is
+    * then considered failed).
     */
   def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit
   def savepoint(name: String): Unit
@@ -41,16 +44,16 @@ trait ConnectionFactory extends Serializable {
   def connect(): SinkConnection
 }
 
-/** Real JDBC backend. `reWriteBatchedInserts=true` makes the Postgres driver
-  * collapse a JDBC batch into multi-row INSERTs — the moral equivalent of
-  * psycopg2's `execute_values` page batching
-  * (`/root/reference/psycopg2_database_helper.py:89-90`).
+/** Real JDBC backend. The sink builds the multi-row statements itself (see
+  * [[PostgresUpsertSink]]), so no driver flag such as pgjdbc's
+  * `reWriteBatchedInserts` is needed for that shape; `properties` pass
+  * through to the driver as given.
   */
 final case class JdbcConnectionFactory(
     url: String,
     user: String,
     password: String,
-    properties: Map[String, String] = Map("reWriteBatchedInserts" -> "true"))
+    properties: Map[String, String] = Map.empty)
   extends ConnectionFactory {
 
   def connect(): SinkConnection = new JdbcSinkConnection(rawConnection())
@@ -73,17 +76,31 @@ final class JdbcSinkConnection(conn: Connection) extends SinkConnection {
   import java.sql.SQLException
   conn.setAutoCommit(false)
   private var savepoints = Map.empty[String, Savepoint]
-  // One PreparedStatement per SQL text for the connection's lifetime: the
-  // sink sends the same upsert thousands of times per partition, and
-  // re-preparing each batch would re-plan it server-side every round trip.
-  private var statements = Map.empty[String, PreparedStatement]
+  // The most recently used PreparedStatements, one per SQL text: a clean
+  // feed sends the same batchSize-row upsert thousands of times per
+  // partition, and re-preparing it would re-plan it server-side every round
+  // trip. The texts vary with the row count, and the runs of a dirty batch
+  // come in many sizes, each statement holding up to 32767 parameters, so
+  // beyond MaxStatements the least recently used one is closed.
+  private val statements =
+    new java.util.LinkedHashMap[String, PreparedStatement](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, PreparedStatement]): Boolean =
+        size > JdbcSinkConnection.MaxStatements && {
+          try e.getValue.close() catch { case _: Throwable => () }
+          true
+        }
+    }
 
-  private def statementFor(sql: String): PreparedStatement =
-    statements.getOrElse(sql, {
+  private def statementFor(sql: String): PreparedStatement = {
+    val cached = statements.get(sql)
+    if (cached != null) cached
+    else {
       val ps = conn.prepareStatement(sql)
-      statements += sql -> ps
+      statements.put(sql, ps)
       ps
-    })
+    }
+  }
 
   /** SQLState class 08 is the standard "connection exception" family; the
     * transient/non-transient connection subclasses and a closed underlying
@@ -135,9 +152,14 @@ final class JdbcSinkConnection(conn: Connection) extends SinkConnection {
   }
   def commit(): Unit = translating { conn.commit() }
   def close(): Unit = {
-    statements.valuesIterator.foreach { ps =>
+    statements.values.forEach { ps =>
       try ps.close() catch { case _: Throwable => () }
     }
     conn.close()
   }
+}
+
+object JdbcSinkConnection {
+  /** Prepared statements kept open per connection. */
+  private[graft] val MaxStatements = 4
 }

@@ -1,8 +1,9 @@
 package graft.sink
 
 /** Upsert-SQL codegen — builds the `INSERT … ON CONFLICT … DO UPDATE` text the
-  * sink executes against Postgres. This is codegen *for the remote engine*
-  * (the reference's O9, `/root/reference/psycopg2_database_helper.py:190-251`),
+  * sink executes against Postgres, for one row ([[build]]) or for `k` rows
+  * in one multi-row `VALUES` list ([[Statement.sql]]). This is codegen *for
+  * the remote engine* (the reference's O9, `psycopg2_database_helper.py:190-251`),
   * not Catalyst codegen. Differences from the reference, by design:
   *
   *  - JDBC `?` placeholders instead of psycopg2 `%s` / asyncpg `\$n`.
@@ -60,30 +61,55 @@ object UpsertSqlGen {
     }.mkString(".")
   }
 
+  /** The upsert for any number of rows at a time, built once from the
+    * column list: [[sql]]`(k)` is `INSERT … VALUES (?, …), (?, …), …` with
+    * `k` tuples, one per row, then the ON CONFLICT tail every `k` shares.
+    * `keyIdx` holds the positions of the conflict key's columns among the
+    * row's; it is empty for a plain INSERT.
+    */
+  final case class Statement(columns: Int, keyIdx: IndexedSeq[Int], head: String, tail: String) {
+    private val tuple = Seq.fill(columns)("?").mkString("(", ", ", ")")
+    def sql(rows: Int): String = {
+      require(rows > 0, "a statement carries at least one row")
+      Iterator.fill(rows)(tuple).mkString(head, ", ", tail)
+    }
+  }
+
+  def statement(
+      columns: Seq[String],
+      tableName: String,
+      uniqueKey: Seq[String] = Nil,
+      colsNotForUpdate: Seq[String] = Nil): Statement = {
+    require(columns.nonEmpty, "cannot build an INSERT with no columns")
+    val qCols = columns.map(quoteIdent)
+    val head = s"INSERT INTO ${quoteTable(tableName)} (${qCols.mkString(", ")}) VALUES "
+    // A key column the rows do not carry takes its default server-side, so
+    // only the carried ones can tell rows apart before sending.
+    val keyIdx = uniqueKey.map(columns.indexOf).filter(_ >= 0).toIndexedSeq
+    val tail =
+      if (uniqueKey.isEmpty) ""
+      else {
+        val excluded = (uniqueKey ++ colsNotForUpdate).toSet
+        val updateCols = columns.filterNot(excluded.contains).map(quoteIdent)
+        val conflict = s" ON CONFLICT (${uniqueKey.map(quoteIdent).mkString(", ")})"
+        if (updateCols.isEmpty) conflict + " DO NOTHING"
+        else {
+          val set =
+            if (updateCols.size == 1) s"${updateCols.head} = EXCLUDED.${updateCols.head}"
+            else
+              s"(${updateCols.mkString(", ")}) = " +
+                s"(${updateCols.map("EXCLUDED." + _).mkString(", ")})"
+          conflict + s" DO UPDATE SET $set"
+        }
+      }
+    Statement(columns.size, keyIdx, head, tail)
+  }
+
+  /** The one-row statement: [[statement]]`(…).sql(1)`. */
   def build(
       columns: Seq[String],
       tableName: String,
       uniqueKey: Seq[String] = Nil,
-      colsNotForUpdate: Seq[String] = Nil): String = {
-    require(columns.nonEmpty, "cannot build an INSERT with no columns")
-    val qCols = columns.map(quoteIdent)
-    val insert =
-      s"INSERT INTO ${quoteTable(tableName)} (${qCols.mkString(", ")}) " +
-        s"VALUES (${Seq.fill(columns.size)("?").mkString(", ")})"
-    if (uniqueKey.isEmpty) insert
-    else {
-      val excluded = (uniqueKey ++ colsNotForUpdate).toSet
-      val updateCols = columns.filterNot(excluded.contains).map(quoteIdent)
-      val conflict = s" ON CONFLICT (${uniqueKey.map(quoteIdent).mkString(", ")})"
-      if (updateCols.isEmpty) insert + conflict + " DO NOTHING"
-      else {
-        val set =
-          if (updateCols.size == 1) s"${updateCols.head} = EXCLUDED.${updateCols.head}"
-          else
-            s"(${updateCols.mkString(", ")}) = " +
-              s"(${updateCols.map("EXCLUDED." + _).mkString(", ")})"
-        insert + conflict + s" DO UPDATE SET $set"
-      }
-    }
-  }
+      colsNotForUpdate: Seq[String] = Nil): String =
+    statement(columns, tableName, uniqueKey, colsNotForUpdate).sql(1)
 }

@@ -25,31 +25,64 @@ object FakeSinkState {
   private[graft] def countConnection(id: String): Unit = synchronized { state(id)._2.incrementAndGet() }
 }
 
-class FakeSinkConnection(id: String, failOn: Seq[Any] => Boolean) extends SinkConnection {
+/** The transaction model both fakes share. Each `executeBatch` element is
+  * one statement; it is split back into rows by the statement's tuple count
+  * ([[UpsertSqlParser.tuples]]), so the one-row and the multi-row shape
+  * land the same rows. Rows failing `failOn` raise, emulating a constraint
+  * violation.
+  */
+abstract class FakeTransaction(failOn: Seq[Any] => Boolean) extends SinkConnection {
   private var pending = Vector.empty[Seq[Any]] // current transaction
   private var marks = Map.empty[String, Int]   // savepoint name → pending size
   var batchCalls = 0
-  val committed = mutable.ArrayBuffer.empty[Seq[Any]] // for direct (driver-side) use
+  var rollbacks = 0
+  /** Rows of every statement, in the order they were sent. */
+  val statementRows = mutable.ArrayBuffer.empty[Int]
+
+  /** Called with each statement's rows before any of them runs; throws to
+    * fail the statement.
+    */
+  protected def checkStatement(sql: String, rows: Seq[Seq[Any]]): Unit = ()
+  /** Receives the rows of each commit, in arrival order. */
+  protected def onCommit(rows: Seq[Seq[Any]]): Unit
 
   def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit = {
     batchCalls += 1
+    val k = UpsertSqlParser.tuples(sql)
     // Harsh mode: rows before the failing one DO land in the transaction,
     // like a real driver mid-batch failure — only rollback-to-savepoint can
     // undo them. Catches implementations that skip the rollback.
-    batch.foreach { row =>
-      if (failOn(row)) throw new RuntimeException(s"constraint violation on $row")
-      pending :+= row
+    batch.foreach { element =>
+      require(element.size % k == 0, s"${element.size} values for $k tuples")
+      val rows = element.grouped(element.size / k).toIndexedSeq
+      statementRows += rows.size
+      checkStatement(sql, rows)
+      rows.foreach { row =>
+        if (failOn(row)) throw new RuntimeException(s"constraint violation on $row")
+        pending :+= row
+      }
     }
   }
   def savepoint(name: String): Unit = marks += name -> pending.size
-  def rollbackTo(name: String): Unit = marks.get(name).foreach(n => pending = pending.take(n))
+  def rollbackTo(name: String): Unit = {
+    rollbacks += 1
+    marks.get(name).foreach(n => pending = pending.take(n))
+  }
   def release(name: String): Unit = marks -= name
   def commit(): Unit = {
-    committed ++= pending
-    if (id.nonEmpty) FakeSinkState.record(id, pending)
+    onCommit(pending)
     pending = Vector.empty
   }
   def close(): Unit = ()
+}
+
+class FakeSinkConnection(id: String, failOn: Seq[Any] => Boolean) extends FakeTransaction(failOn) {
+  val committed = mutable.ArrayBuffer.empty[Seq[Any]] // for direct (driver-side) use
+
+  protected def onCommit(rows: Seq[Seq[Any]]): Unit = {
+    committed ++= rows
+    if (id.nonEmpty) FakeSinkState.record(id, rows)
+  }
 }
 
 /** `failOnKeys` marks bad rows by their first column value (must be
@@ -74,7 +107,8 @@ object FlakyState {
   def markDied(id: String): Unit = synchronized { dead += id }
 }
 
-/** Parses the exact SQL text [[graft.sink.UpsertSqlGen]] emits, so the keyed
+/** Parses the exact SQL text [[graft.sink.UpsertSqlGen]] emits, one row or
+  * `k` (the VALUES tuple count, [[parseRows]]), so the keyed
   * fake EXECUTES the generated statement rather than re-assuming its
   * semantics: if the codegen put the wrong columns in the conflict target or
   * the SET list, the fake's final table state diverges from the
@@ -89,7 +123,7 @@ object UpsertSqlParser {
   final case class UpsertSpec(
       table: String, columns: Vector[String], key: Vector[String], mode: Mode)
 
-  private val InsertRe = """INSERT INTO (\S+) \(([^)]*)\) VALUES \([?, ]*\)(.*)""".r
+  private val InsertRe = """(?s)INSERT INTO (\S+) \(([^)]*)\) VALUES (.*)""".r
   private val ConflictRe = """ ON CONFLICT \(([^)]*)\)(.*)""".r
 
   /** Strip the generator's Postgres double-quoting back to the raw name
@@ -101,10 +135,30 @@ object UpsertSqlParser {
     else ident
   private def unqTable(t: String): String = t.split('.').map(unq).mkString(".")
 
-  def parse(sql: String): UpsertSpec = {
-    val InsertRe(rawTable, colList, rest) = sql: @unchecked
+  def parse(sql: String): UpsertSpec = parseRows(sql)._1
+
+  /** Rows one execution of `sql` binds: its VALUES tuple count, or 1 for a
+    * text that is no INSERT (tests pass placeholders such as "sql").
+    */
+  def tuples(sql: String): Int = if (InsertRe.matches(sql)) parseRows(sql)._2 else 1
+
+  /** The spec and the VALUES tuple count; every tuple must have one `?`
+    * per column.
+    */
+  def parseRows(sql: String): (UpsertSpec, Int) = {
+    val InsertRe(rawTable, colList, values) = sql: @unchecked
     val table = unqTable(rawTable)
     val columns = colList.split(", ", -1).toVector.map(unq)
+    val tuple = Seq.fill(columns.size)("?").mkString("(", ", ", ")")
+    assert(values.startsWith(tuple), s"VALUES tuple arity != ${columns.size} in: $sql")
+    val next = ", " + tuple
+    var rows = 1
+    var pos = tuple.length
+    while (values.startsWith(next, pos)) { rows += 1; pos += next.length }
+    (spec(sql, table, columns, values.substring(pos)), rows)
+  }
+
+  private def spec(sql: String, table: String, columns: Vector[String], rest: String): UpsertSpec = {
     if (rest.isEmpty) UpsertSpec(table, columns, Vector.empty, InsertOnly)
     else {
       val ConflictRe(keyList, action) = rest: @unchecked
@@ -180,32 +234,29 @@ object KeyedSinkState {
   * closed loop for the sink's flagship output — the ON CONFLICT text is
   * finally executed by an engine (this one) and reconciled against
   * [[graft.operators.MergeOps.merge]].
+  *
+  * Like Postgres, it refuses a `DO UPDATE` statement that carries one key
+  * twice (SQLSTATE 21000), so a sink that does not cut its statements at
+  * repeated keys pays rollbacks here as it would against the server.
   */
 class KeyedUpsertFakeConnection(id: String, failOn: Seq[Any] => Boolean)
-    extends SinkConnection {
-  private var pending = Vector.empty[Seq[Any]]
-  private var marks = Map.empty[String, Int]
+    extends FakeTransaction(failOn) {
   private var spec: Option[UpsertSqlParser.UpsertSpec] = None
 
-  def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit = {
+  override protected def checkStatement(sql: String, rows: Seq[Seq[Any]]): Unit = {
     val parsed = UpsertSqlParser.parse(sql)
-    spec.foreach(s => assert(s == parsed, "one SQL text per sink run expected"))
+    spec.foreach(s => assert(s == parsed, "one upsert spec per sink run expected"))
     spec = Some(parsed)
-    // Harsh mode, like FakeSinkConnection: rows before the failing one DO
-    // land in the transaction — only rollback-to-savepoint undoes them.
-    batch.foreach { row =>
-      if (failOn(row)) throw new RuntimeException(s"constraint violation on $row")
-      pending :+= row
+    if (parsed.mode.isInstanceOf[UpsertSqlParser.DoUpdate]) {
+      val keyIdx = parsed.key.map(parsed.columns.indexOf)
+      val keys = rows.map(r => keyIdx.map(r(_)))
+      if (keys.distinct.size != keys.size)
+        throw new RuntimeException(
+          "ERROR: ON CONFLICT DO UPDATE command cannot affect row a second time")
     }
   }
-  def savepoint(name: String): Unit = marks += name -> pending.size
-  def rollbackTo(name: String): Unit = marks.get(name).foreach(n => pending = pending.take(n))
-  def release(name: String): Unit = marks -= name
-  def commit(): Unit = {
-    spec.foreach(s => KeyedSinkState.applyCommit(id, s, pending))
-    pending = Vector.empty
-  }
-  def close(): Unit = ()
+  protected def onCommit(rows: Seq[Seq[Any]]): Unit =
+    spec.foreach(s => KeyedSinkState.applyCommit(id, s, rows))
 }
 
 class KeyedUpsertFakeFactory(id: String, failOnKeys: Set[Long]) extends ConnectionFactory {

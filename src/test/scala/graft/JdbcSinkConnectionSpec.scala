@@ -53,6 +53,19 @@ class JdbcSinkConnectionSpec extends AnyFunSuite {
     assert(db.addBatches.get == 51 && db.executeBatches.get == 51)
   }
 
+  test("statements per connection stay bounded when every text differs") {
+    // A dirty batch's runs come in many sizes, so the multi-row texts vary;
+    // only the most recently used few may stay open.
+    val db = new StubJdbc
+    val conn = new JdbcSinkConnection(db.connection)
+    (1 to 1000).foreach(i => conn.executeBatch(s"INSERT $i", Seq(Seq[Any](i))))
+    val open = db.prepares.get - db.stmtCloses.get
+    assert(db.prepares.get == 1000)
+    assert(open <= JdbcSinkConnection.MaxStatements, s"$open statements left open")
+    conn.close()
+    assert(db.stmtCloses.get == 1000 && db.connClosed)
+  }
+
   test("close() closes cached statements then the connection") {
     val db = new StubJdbc
     val conn = new JdbcSinkConnection(db.connection)

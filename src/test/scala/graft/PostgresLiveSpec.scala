@@ -148,8 +148,8 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     // already committed on the server.
     val good = (1 to 4).map(i => Row(i, s"n$i", i))
     val poison = (5 to 8).map(i => Row(i, null, null))
-    val sql = UpsertSqlGen.build(schema.fieldNames.toIndexedSeq, "live_poison", Seq("id"))
-    val stats = PostgresUpsertSink.writePartition((good ++ poison).iterator, sql,
+    val stmt = UpsertSqlGen.statement(schema.fieldNames.toIndexedSeq, "live_poison", Seq("id"))
+    val stats = PostgresUpsertSink.writePartition((good ++ poison).iterator, stmt,
       PsqlConnectionFactory(sockDir), batchSize = 4, maxRejects = None)
     assert(stats.rejected === 4)
     assert(tableState("live_poison").keySet === (1 to 4).toSet)
@@ -165,16 +165,56 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     // timeout turns that into a failure instead of a hung suite.
     val pad = "x" * 500
     val rows = Row(1, pad, null) +: (2 to 1000).map(i => Row(i, pad, i))
-    val sql = UpsertSqlGen.build(schema.fieldNames.toIndexedSeq, "live_echo", Seq("id"))
+    val stmt = UpsertSqlGen.statement(schema.fieldNames.toIndexedSeq, "live_echo", Seq("id"))
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    val stats = Await.result(Future(PostgresUpsertSink.writePartition(rows.iterator, sql,
+    val stats = Await.result(Future(PostgresUpsertSink.writePartition(rows.iterator, stmt,
       PsqlConnectionFactory(sockDir), batchSize = 1000, maxRejects = None))(
       ExecutionContext.global), 120.seconds)
     assert(stats.loaded === 999 && stats.rejected === 1)
     assert(stats.errors.size === 1 && stats.errors.head.contains("null value"),
       stats.errors.mkString("; "))
     assert(psql("SELECT count(*), min(id) FROM live_echo") === Seq("999|2"))
+  }
+
+  test("multi-row statements live: far-apart repeated keys and a bad row in one run") {
+    live()
+    psql("CREATE TABLE live_runs (id int PRIMARY KEY, name varchar(10), qty int NOT NULL)")
+    // One 300-row batch in arrival order. Row 250 repeats key 7, so the
+    // first statement ends before it; row 100 breaks NOT NULL inside that
+    // first statement. Row 299 repeats key 150 across statements.
+    val rows = (1 to 300).map {
+      case 100 => Row(100, "bad", null)
+      case 250 => Row(7, "late7", 7000)
+      case 299 => Row(150, "late150", 1500)
+      case i => Row(i, s"n$i", i)
+    }
+    val stmt = UpsertSqlGen.statement(schema.fieldNames.toIndexedSeq, "live_runs", Seq("id"))
+    val stats = PostgresUpsertSink.writePartition(rows.iterator, stmt,
+      PsqlConnectionFactory(sockDir), batchSize = 1000, maxRejects = None)
+    assert(stats.loaded === 299 && stats.rejected === 1)
+    assert(stats.errors.size === 1 && stats.errors.head.contains("null value"),
+      stats.errors.mkString("; "))
+    assert(!stats.errors.exists(_.contains("cannot affect row a second time")))
+    val state = tableState("live_runs")
+    assert(state.keySet === (1 to 300).toSet -- Set(100, 250, 299))
+    assert(state(7) === (("late7", 7000)) && state(150) === (("late150", 1500)),
+      "the later row of a key wins")
+  }
+
+  test("multi-row statements live: char(3) keys equal only in Postgres, the split resolves them") {
+    live()
+    psql("CREATE TABLE live_char (code char(3) PRIMARY KEY, qty int)")
+    // 'ab' and 'ab ' differ on the JVM, so the cut keeps them in one
+    // statement; Postgres pads char(3) and refuses it (SQLSTATE 21000). The
+    // split then sends them apart, in arrival order.
+    val rows = Seq(Row("aa", 1), Row("ab", 2), Row("ac", 3), Row("ab ", 20), Row("ad", 4))
+    val stmt = UpsertSqlGen.statement(Seq("code", "qty"), "live_char", Seq("code"))
+    val stats = PostgresUpsertSink.writePartition(rows.iterator, stmt,
+      PsqlConnectionFactory(sockDir), batchSize = 1000, maxRejects = None)
+    assert(stats.loaded === 5 && stats.rejected === 0 && stats.errors.isEmpty)
+    assert(psql("SELECT rtrim(code), qty FROM live_char ORDER BY code") ===
+      Seq("aa|1", "ab|20", "ac|3", "ad|4"))
   }
 
   test("pg_catalog introspection SQL (O7/O8) validated against the live server") {

@@ -1,10 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sink.PostgresUpsertSink
+import graft.sink.{ConnectionFactory, PostgresUpsertSink, UpsertSqlGen}
 
 class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
+
+  /** The sink's statement for (k, v) rows keyed on k. */
+  private val kv = UpsertSqlGen.statement(Seq("k", "v"), "t", Seq("k"))
 
   private def run(
       id: String,
@@ -63,7 +66,7 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     val factory = new FakeConnectionFactory("cap", bad)
     val rows = (1L to 286L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     val stats = PostgresUpsertSink.writePartition(
-      rows.iterator, "sql", factory, batchSize = 10, maxRejects = None)
+      rows.iterator, kv, factory, batchSize = 10, maxRejects = None)
     assert(stats.loaded == 143 && stats.rejected == 143)
     assert(stats.errors.size == 101)
     assert(stats.errors.last ==
@@ -136,7 +139,7 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     }
     val rows = (1L to 100L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     val stats = graft.sink.PostgresUpsertSink.writePartition(
-      rows.iterator, "sql", factory, batchSize = 10, maxRejects = None)
+      rows.iterator, kv, factory, batchSize = 10, maxRejects = None)
     assert(stats.loaded == 100 && stats.rejected == 0 && stats.errors.isEmpty)
     val landed = FakeSinkState.committed(id).map(_.head.asInstanceOf[Long]).sorted
     assert(landed == (1L to 100L), "every row exactly once despite the drop")
@@ -162,10 +165,9 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     val factory = new graft.sink.ConnectionFactory {
       def connect() = new CommitDropConnection(id)
     }
-    val sql = graft.sink.UpsertSqlGen.build(Seq("k", "v"), "t", Seq("k"))
     val rows = (1L to 30L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     val stats = graft.sink.PostgresUpsertSink.writePartition(
-      rows.iterator, sql, factory, batchSize = 10, maxRejects = None)
+      rows.iterator, kv, factory, batchSize = 10, maxRejects = None)
     assert(stats.loaded == 30 && stats.rejected == 0)
     assert(KeyedSinkState.rows(id).map(_.head.asInstanceOf[Long]).sorted == (1L to 30L),
       "idempotent upsert: the in-doubt batch lands exactly once")
@@ -182,7 +184,7 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     val rows = (1L to 10L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     intercept[graft.sink.SinkConnectionLostException] {
       graft.sink.PostgresUpsertSink.writePartition(
-        rows.iterator, "sql", factory, batchSize = 10, maxRejects = None)
+        rows.iterator, kv, factory, batchSize = 10, maxRejects = None)
     }
   }
 
@@ -208,10 +210,73 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     }
     val rows = (1L to 40L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
     val stats = graft.sink.PostgresUpsertSink.writePartition(
-      rows.iterator, "sql", factory, batchSize = 10, maxRejects = None)
+      rows.iterator, kv, factory, batchSize = 10, maxRejects = None)
     assert(stats.rejected == 1 && stats.loaded == 39)
     val landed = FakeSinkState.committed(id).map(_.head.asInstanceOf[Long]).toSet
     assert(landed == (1L to 40L).toSet - 17L)
+  }
+
+  /** One partition written in arrival order through `conn`. */
+  private def writeVia(conn: graft.sink.SinkConnection, rows: Seq[org.apache.spark.sql.Row],
+      stmt: UpsertSqlGen.Statement, batchSize: Int) =
+    PostgresUpsertSink.writePartition(rows.iterator, stmt,
+      new ConnectionFactory { def connect() = conn }, batchSize, maxRejects = None)
+
+  test("multi-row shape: a clean 1000-row batch is one call holding one statement") {
+    val conn = new FakeSinkConnection("", _ => false)
+    val stats = writeVia(conn, (1L to 1000L).map(i => org.apache.spark.sql.Row(i, s"v$i")),
+      kv, batchSize = 1000)
+    assert(stats.loaded == 1000 && stats.rejected == 0)
+    assert(conn.batchCalls == 1 && conn.statementRows == Seq(1000))
+    assert(conn.rollbacks == 0)
+    assert(conn.committed.map(_.head) == (1L to 1000L))
+  }
+
+  test("multi-row shape: one repeated key cuts the batch into two statements, no rollback") {
+    // Row 71 repeats key 40: Postgres would refuse one DO UPDATE statement
+    // holding both (SQLSTATE 21000), and so does the keyed fake.
+    val id = "cut_once"
+    KeyedSinkState.init(id)
+    val conn = new KeyedUpsertFakeConnection(id, _ => false)
+    val rows = (1L to 100L).map { i =>
+      if (i == 71L) org.apache.spark.sql.Row(40L, "late") else org.apache.spark.sql.Row(i, s"v$i")
+    }
+    val stats = writeVia(conn, rows, kv, batchSize = 1000)
+    assert(stats.loaded == 100 && stats.rejected == 0)
+    assert(conn.batchCalls == 2 && conn.statementRows == Seq(70, 30))
+    assert(conn.rollbacks == 0)
+    val byKey = KeyedSinkState.rows(id).map(r => r(0) -> r(1)).toMap
+    assert(byKey.size == 99 && byKey(40L) == "late", "the later row wins")
+  }
+
+  test("multi-row shape: statements stay within 32767 bind parameters") {
+    val cols = (0 until 40).map(i => s"c$i")
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("c0"))
+    val conn = new FakeSinkConnection("", _ => false)
+    val rows = (1L to 1000L).map(i => org.apache.spark.sql.Row.fromSeq(i +: Seq.fill(39)(0L)))
+    val stats = writeVia(conn, rows, stmt, batchSize = 1000)
+    assert(stats.loaded == 1000)
+    assert(conn.statementRows == Seq(819, 181), "32767 / 40 = 819 rows at most")
+    assert(stmt.sql(819).count(_ == '?') == 819 * 40)
+    assert(conn.committed.map(_.head) == (1L to 1000L))
+  }
+
+  test("multi-row shape: a bad row splits over rows, with the cut applied to each half") {
+    // Key 3 repeats inside the first half; key 13 is bad. The split must
+    // reject exactly row 13, land everything else once, and never send a
+    // statement that repeats a key.
+    val id = "cut_split"
+    KeyedSinkState.init(id)
+    val conn = new KeyedUpsertFakeConnection(id, r => r.head == 13L)
+    val rows = (1L to 16L).map { i =>
+      if (i == 6L) org.apache.spark.sql.Row(3L, "late") else org.apache.spark.sql.Row(i, s"v$i")
+    }
+    val stats = writeVia(conn, rows, kv, batchSize = 16)
+    assert(stats.loaded == 15 && stats.rejected == 1)
+    assert(stats.errors.size == 1 && stats.errors.head.contains("constraint violation"))
+    val byKey = KeyedSinkState.rows(id).map(r => r(0) -> r(1)).toMap
+    assert(byKey.keySet == (1L to 16L).toSet - 6L - 13L)
+    assert(byKey(3L) == "late")
   }
 
   test("insert-only mode (no unique key) uses plain INSERT") {

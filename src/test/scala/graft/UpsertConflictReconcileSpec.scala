@@ -34,8 +34,8 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
       .as[R].collect().toSet
 
   test("DO UPDATE conflict path == MergeOps.merge, splits and intra-source dups included") {
-    val sql = UpsertSqlGen.build(cols, "t", Seq("k"))
-    assert(sql.contains("DO UPDATE SET"), sql)
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("k"))
+    assert(stmt.sql(1).contains("DO UPDATE SET"), stmt.sql(1))
 
     val target = Seq[R]((1L, "t1", 10L), (2L, "t2", 11L), (3L, "t3", 12L))
     // k=2 updated twice in-source (last wins), k=5 bad (binary-split reject),
@@ -52,11 +52,11 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
     // boundaries and the bad row forces a rollback + binary split mid-feed.
     val seed = PostgresUpsertSink.writePartition(
       asBatch(target).iterator.map(org.apache.spark.sql.Row.fromSeq(_)),
-      sql, factory, batchSize = 2, maxRejects = None)
+      stmt, factory, batchSize = 2, maxRejects = None)
     assert(seed.loaded == 3 && seed.rejected == 0)
     val stats = PostgresUpsertSink.writePartition(
       asBatch(source).iterator.map(org.apache.spark.sql.Row.fromSeq(_)),
-      sql, factory, batchSize = 3, maxRejects = None)
+      stmt, factory, batchSize = 3, maxRejects = None)
     assert(stats.rejected == 1 && stats.loaded == source.size - 1)
 
     val expected = mergeOracle(target, source.filterNot(r => bad(r._1)))
@@ -68,8 +68,29 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
     assert(byKey(1L) == ((1L, "t1", 10L)), "unconflicted target row untouched")
   }
 
+  test("multi-row statements over a feed dense in repeated keys == MergeOps.merge") {
+    // 600 rows over 90 keys in batches of 64: most batches are cut into
+    // several runs, and the bad keys force splits whose halves are cut
+    // again. Every row is its own arrival (seq), so the merge is exact.
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("k"))
+    val rng = new scala.util.Random(7)
+    val target = (1L to 30L).map(i => (i, s"t$i", i): R)
+    val source = (1 to 600).map(i => (1L + rng.nextInt(90), s"s$i", 1000L + i): R)
+    val bad = Set(41L, 47L, 83L) // none in the target, which the same factory writes
+
+    KeyedSinkState.init("reconcile_dense")
+    val factory = new KeyedUpsertFakeFactory("reconcile_dense", bad)
+    Seq(target, source).foreach { rows =>
+      PostgresUpsertSink.writePartition(
+        asBatch(rows).iterator.map(org.apache.spark.sql.Row.fromSeq(_)),
+        stmt, factory, batchSize = 64, maxRejects = None)
+    }
+    assert(tableState("reconcile_dense") ===
+      mergeOracle(target, source.filterNot(r => bad(r._1))))
+  }
+
   test("distributed sink run (parallelism 2, key-routed) == MergeOps.merge") {
-    val sql = UpsertSqlGen.build(cols, "t", Seq("k"))
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("k"))
     val target = (1L to 40L).map(i => (i, s"t$i", i): R)
     // Unique keys per source row: half conflict with target, half are new —
     // cross-partition arrival order is then irrelevant, which is exactly why
@@ -94,8 +115,8 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
   test("DO NOTHING conflict path: target untouched, first in-source write wins") {
     // Every non-key column excluded from update ⇒ the generator emits
     // DO NOTHING; expected state = target ∪ firstWins(source)[keys ∉ target].
-    val sql = UpsertSqlGen.build(cols, "t", Seq("k"), colsNotForUpdate = Seq("v", "seq"))
-    assert(sql.endsWith("DO NOTHING"), sql)
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("k"), colsNotForUpdate = Seq("v", "seq"))
+    assert(stmt.sql(1).endsWith("DO NOTHING"), stmt.sql(1))
 
     val target = Seq[R]((1L, "t1", 10L), (2L, "t2", 11L))
     val source = Seq[R](
@@ -106,7 +127,7 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
     Seq(target, source).foreach { rows =>
       PostgresUpsertSink.writePartition(
         asBatch(rows).iterator.map(org.apache.spark.sql.Row.fromSeq(_)),
-        sql, factory, batchSize = 3, maxRejects = None)
+        stmt, factory, batchSize = 3, maxRejects = None)
     }
 
     // DO NOTHING == merge with the roles FLIPPED: stored rows always beat
@@ -126,8 +147,8 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
   test("partial colsNotForUpdate: SET columns update, excluded column keeps stored value") {
     // (k, v, seq) with seq excluded ⇒ SET touches only v; a conflicting row
     // updates the payload but keeps the originally-stored seq.
-    val sql = UpsertSqlGen.build(cols, "t", Seq("k"), colsNotForUpdate = Seq("seq"))
-    assert(sql.contains("""DO UPDATE SET "v" = EXCLUDED."v""""), sql)
+    val stmt = UpsertSqlGen.statement(cols, "t", Seq("k"), colsNotForUpdate = Seq("seq"))
+    assert(stmt.sql(1).contains("""DO UPDATE SET "v" = EXCLUDED."v""""), stmt.sql(1))
 
     KeyedSinkState.init("reconcile_partial")
     val factory = new KeyedUpsertFakeFactory("reconcile_partial", Set.empty)
@@ -135,7 +156,7 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
       .foreach { rows =>
         PostgresUpsertSink.writePartition(
           asBatch(rows).iterator.map(org.apache.spark.sql.Row.fromSeq(_)),
-          sql, factory, batchSize = 10, maxRejects = None)
+          stmt, factory, batchSize = 10, maxRejects = None)
       }
     assert(tableState("reconcile_partial") ===
       Set[R]((1L, "new", 10L), (2L, "fresh", 100L)))
@@ -153,5 +174,9 @@ class UpsertConflictReconcileSpec extends AnyFunSuite with SparkSpec {
       UpsertSpec("t", Vector("a", "b"), Vector("a"), DoNothing))
     assert(parse(UpsertSqlGen.build(Seq("a", "b", "c"), "t", Seq("a", "b"))) ==
       UpsertSpec("t", Vector("a", "b", "c"), Vector("a", "b"), DoUpdate(Vector("c"))))
+    assert(parseRows(UpsertSqlGen.statement(Seq("a", "b", "c"), "t", Seq("a")).sql(3)) ==
+      ((UpsertSpec("t", Vector("a", "b", "c"), Vector("a"), DoUpdate(Vector("b", "c"))), 3)))
+    assert(parseRows(UpsertSqlGen.statement(Seq("a", "b"), "t").sql(2)) ==
+      ((UpsertSpec("t", Vector("a", "b"), Vector.empty, InsertOnly), 2)))
   }
 }

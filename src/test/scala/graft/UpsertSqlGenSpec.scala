@@ -84,6 +84,22 @@ class UpsertSqlGenSpec extends AnyFunSuite {
     assert(UpsertSqlGen.quoteTable("\"Schema\".table") == "\"Schema\".\"table\"")
   }
 
+  test("k-row statement: k placeholder tuples, then the one-row statement's tail") {
+    val stmt = UpsertSqlGen.statement(Seq("k", "x"), "t", uniqueKey = Seq("k"))
+    assert(stmt.sql(3) ==
+      """INSERT INTO "t" ("k", "x") VALUES (?, ?), (?, ?), (?, ?) ON CONFLICT ("k") """ +
+        """DO UPDATE SET "x" = EXCLUDED."x"""")
+    assert(stmt.sql(1) == UpsertSqlGen.build(Seq("k", "x"), "t", uniqueKey = Seq("k")))
+    assert(stmt.keyIdx == Seq(0))
+    assert(UpsertSqlGen.statement(Seq("a", "b"), "t").sql(2) ==
+      """INSERT INTO "t" ("a", "b") VALUES (?, ?), (?, ?)""")
+  }
+
+  test("key positions: composite keys in key order; no key, no positions") {
+    assert(UpsertSqlGen.statement(Seq("x", "k2", "k1"), "t", Seq("k1", "k2")).keyIdx == Seq(2, 1))
+    assert(UpsertSqlGen.statement(Seq("a", "b"), "t").keyIdx.isEmpty)
+  }
+
   test("empty column list rejected") {
     intercept[IllegalArgumentException](UpsertSqlGen.build(Nil, "t"))
   }
